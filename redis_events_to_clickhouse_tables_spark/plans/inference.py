@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # the reference's date-sniff regex (src/utils.ts:5): leading group(s) of
 # 2-or-4 digits each followed by '/' or '-'. "2024-12-01" and
@@ -59,36 +58,6 @@ def _is_date_string(col: Column) -> Column:
     return F.when(~col.rlike(DATE_STRING_REGEX), F.lit(False)).otherwise(
         sniff_timestamp(col).isNotNull()
     )
-
-
-def infer_leaf_types(df: DataFrame) -> dict[str, T.DataType]:
-    """Refine string columns to TimestampType where *every* non-null
-    value is a date-string (full-batch scan, one aggregate job)."""
-    string_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    if not string_cols:
-        return {}
-    aggs = [
-        (
-            F.min(F.when(F.col(c).isNotNull(), _is_date_string(F.col(c)).cast("int")))
-        ).alias(c)
-        for c in string_cols
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return {
-        c: T.TimestampType()
-        for c in string_cols
-        if row[c] == 1  # None => column never present; stays string
-    }
-
-
-def apply_leaf_types(df: DataFrame, refinements: dict[str, T.DataType]) -> DataFrame:
-    out = []
-    for f in df.schema.fields:
-        if f.name in refinements and isinstance(refinements[f.name], T.TimestampType):
-            out.append(sniff_timestamp(F.col(f.name)).alias(f.name))
-        else:
-            out.append(F.col(f.name))
-    return df.select(*out)
 
 
 def parse_events(spark: SparkSession, raw: DataFrame, json_col: str = "value") -> DataFrame:

@@ -15,11 +15,13 @@ the ``_dlq`` table with attempt counters and the error (E1), and
 events of non-critical types that have already failed once are
 dropped (E4/F2). ``_trace`` is the JSONL side-output (K4).
 
-Scale note: the per-type fan-out collects only the *distinct event
-types* of the batch (bounded by the number of destination tables —
-the same cardinality as the reference's bulker map), never event
-rows. Each table's rows are then one filtered write; with N tables
-this is N filtered scans of one cached batch.
+Scale note: the whole batch is normalized once, routed by event type
+(normalize.py): two grouped aggregates whatever the number of types,
+collecting one row per *distinct event type* (bounded by the number
+of destination tables — the same cardinality as the reference's
+bulker map), never event rows. Each table's rows are then one
+filtered write of the shared flattened cache; with N tables this is
+N filtered scans of one cached batch.
 """
 
 from __future__ import annotations
@@ -101,9 +103,10 @@ def _is_interruption(exc: BaseException) -> bool:
     messages: list[str] = []
     for e in chain:
         names.append(type(e).__name__)
-        jt = getattr(e, "java_exception", None) or getattr(
-            getattr(e, "_origin", None), "java_exception", None
-        )
+        # py4j errors carry the throwable as java_exception, pyspark's
+        # captured errors as _origin (any attribute of a py4j object
+        # resolves to a JavaMember, so never probe one for a field)
+        jt = getattr(e, "java_exception", None) or getattr(e, "_origin", None)
         if jt is None:
             # plain python exception: its message is scanned only when
             # no data-error condition marks it as value-quoting
@@ -154,10 +157,11 @@ class IngestReport:
     # Wall seconds per pipeline phase (BENCH r6 item 6: a depressed
     # ingest headline must self-attribute). parse_infer is a single
     # wall span; route is 0.0 by construction (the routing table rides
-    # the same grouped aggregate as the counts — kept as a key for
-    # record continuity); normalize/append are SUMS across the
-    # concurrent per-table flushes, so they can exceed the batch wall
-    # time — they attribute cost, they don't partition the clock.
+    # normalize's first grouped aggregate — kept as a key for record
+    # continuity); normalize is the one routed normalize of the batch,
+    # its shared aggregates included; append is a SUM across the
+    # concurrent per-table flushes, so it can exceed the batch wall
+    # time — it attributes cost, it doesn't partition the clock.
     phase_seconds: dict[str, float] = field(default_factory=dict)
 
 
@@ -184,7 +188,7 @@ class IngestEngine:
         # interruption-shaped re-raises per (batch_id, table) so a
         # disguised poison batch can't replay forever. Bounded by the
         # number of distinct failing batches in this process lifetime.
-        self._interruption_replays: dict[tuple[int, str], int] = {}
+        self._interruption_replays: dict[tuple[int, str | None], int] = {}
 
     # -- K4: trace side-output -------------------------------------------
     def _trace(self, payload: dict, suffix: str = "") -> None:
@@ -326,6 +330,44 @@ class IngestEngine:
             finally:
                 dlq.unpersist()
 
+    def _aborts_batch(
+        self, exc: BaseException, batch_id: int | None, table: str | None
+    ) -> bool:
+        """True when ``exc`` must abort the batch instead of being
+        dead-lettered (``table`` None: the shared normalize stage).
+
+        A stop()/shutdown interrupt mid-flush is NOT a bad batch:
+        demoting it would let the micro-batch "succeed", commit its
+        offsets, and strand the events in the DLQ (observed: a
+        maintenance restart racing an in-flight batch silently dropped
+        a row to the DLQ forever). Re-raising aborts the batch
+        uncommitted so it replays on restart — the idempotent batch-id
+        log absorbs any partial table writes. The detection errs
+        toward re-raise: a false positive costs one replay — and only
+        up to the replay cap, so a deterministic poison batch whose
+        error text mimics a cancellation still reaches the DLQ instead
+        of stalling ingestion (ADVICE r4).
+        """
+        if not _is_interruption(exc):
+            return False
+        if batch_id is None:
+            return True
+        key = (batch_id, table)
+        with self._lock:
+            n = self._interruption_replays.get(key, 0) + 1
+            self._interruption_replays[key] = n
+        if n <= _INTERRUPTION_REPLAY_CAP:
+            return True
+        self._trace(
+            {
+                "event": "interruption_replay_cap",
+                "batch": batch_id,
+                "table": table,
+                "replays": n,
+            }
+        )
+        return False
+
     # -- the tick ---------------------------------------------------------
     def process_raw_batch(self, raw: DataFrame, batch_id: int | None = None) -> IngestReport:
         """Ingest a batch of raw JSON strings (column ``value``).
@@ -357,28 +399,36 @@ class IngestEngine:
             self._trace({"event": "missing_routing_key", "batch": batch_id, "rows": n})
             return report
 
+        _phase("parse_infer", time.perf_counter() - t_parse)
+        _phase("route", 0.0)
+
         events = events.persist()
         try:
-            # ONE grouped aggregate yields total + F1 missing-routing-
-            # key counts AND the G1 routing table (the null group is
-            # the missing-key bucket; group cardinality is bounded by
-            # the number of destination tables, like the reference's
-            # bulker map) — the old separate count-agg and distinct()
-            # jobs each re-scanned the batch
-            groups = (
-                events.groupBy(F.col(etp).alias("__etype"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            report.n_events = sum(r["n"] for r in groups)
-            # the agg above is what materializes the cached JSON parse,
-            # so the span from parse_events to here is the parse+infer
-            # cost
-            _phase("parse_infer", time.perf_counter() - t_parse)
+            valid = events.filter(F.col(etp).isNotNull())
+            t_norm = time.perf_counter()
+            try:
+                # ONE routed normalize for the whole batch: its first
+                # grouped aggregate (which also materializes the cached
+                # JSON parse) yields the routing table and the counts
+                batch = normalize_events(events, self.config, route_by=etp)
+            except Exception as exc:  # noqa: BLE001 — E1 for every type
+                if self._aborts_batch(exc, batch_id, None):
+                    raise
+                # a shared-stage failure must not stall the stream:
+                # every routed type is dead-lettered with it, and DLQ
+                # retry re-normalizes each table on its own
+                err = str(exc)[:500]
+                types = [r[0] for r in valid.select(etp).distinct().collect()]
+                for etype in sorted(types):
+                    report.errors[etype] = err
+                    self._dead_letter(
+                        valid.filter(F.col(etp) == etype), etype, err, report
+                    )
+                return report
+            _phase("normalize", time.perf_counter() - t_norm)
+            report.n_events = sum(batch.counts.values())
             # F1: events with no routing key are logged and dropped
-            report.n_missing_routing_key = sum(
-                r["n"] for r in groups if r["__etype"] is None
-            )
+            report.n_missing_routing_key = batch.counts.get(None, 0)
             if report.n_missing_routing_key:
                 self._trace(
                     {
@@ -387,28 +437,14 @@ class IngestEngine:
                         "rows": report.n_missing_routing_key,
                     }
                 )
-            valid = events.filter(F.col(etp).isNotNull())
-            types = [r["__etype"] for r in groups if r["__etype"] is not None]
-            _phase("route", 0.0)
 
             def _process_type(etype: str) -> None:
-                sub = valid.filter(F.col(etp) == etype)
-                cached = None
                 try:
-                    # materialize=True: the flattened projection is
-                    # persisted and filled by the refinement aggregate
-                    # itself, so the count here and the write below
-                    # read the cache instead of re-running the
-                    # pipeline (one flatten execution per type, not
-                    # two — VERDICT r8 item 6); normalize+evolve cost
-                    # stays attributable separately from the append
-                    t_norm = time.perf_counter()
-                    rows, cached, n = normalize_events(
-                        sub, self.config, materialize=True
-                    )
-                    if n is None:  # custom P8 transform: count for real
-                        n = rows.count()
-                    _phase("normalize", time.perf_counter() - t_norm)
+                    rows = batch.frames[etype]
+                    # the routed count is authoritative for the default
+                    # transform (it adds a column, never filters); a
+                    # custom P8 hook may change the row count
+                    n = batch.counts[etype] if self.config.transform is None else rows.count()
                     t_append = time.perf_counter()
                     target = self.config.target_rows_per_file
                     coalesce_to = (
@@ -444,57 +480,30 @@ class IngestEngine:
                         suffix=".success.log",
                     )
                 except Exception as exc:  # noqa: BLE001 — E1: dead-letter path
-                    if _is_interruption(exc):
-                        # A stop()/shutdown interrupt mid-flush is NOT a
-                        # bad batch: demoting it would let the micro-batch
-                        # "succeed", commit its offsets, and strand the
-                        # events in the DLQ (observed: a maintenance
-                        # restart racing an in-flight batch silently
-                        # dropped a row to the DLQ forever). Re-raise so
-                        # the batch aborts uncommitted and replays on
-                        # restart — the idempotent batch-id log absorbs
-                        # any partial table writes. The detection errs
-                        # toward re-raise: a false positive costs one
-                        # replay — and only up to the replay cap, so a
-                        # deterministic poison batch whose error text
-                        # mimics a cancellation still reaches the DLQ
-                        # instead of stalling ingestion (ADVICE r4).
-                        capped = False
-                        if batch_id is not None:
-                            key = (batch_id, etype)
-                            with self._lock:
-                                n = self._interruption_replays.get(key, 0) + 1
-                                self._interruption_replays[key] = n
-                            capped = n > _INTERRUPTION_REPLAY_CAP
-                        if not capped:
-                            raise
-                        self._trace(
-                            {
-                                "event": "interruption_replay_cap",
-                                "batch": batch_id,
-                                "table": etype,
-                                "replays": self._interruption_replays[(batch_id, etype)],
-                            }
-                        )
+                    if self._aborts_batch(exc, batch_id, etype):
+                        raise
                     with self._lock:
                         report.errors[etype] = str(exc)[:500]
-                    self._dead_letter(sub, etype, str(exc)[:500], report)
-                finally:
-                    if cached is not None:
-                        cached.unpersist()
+                    self._dead_letter(
+                        valid.filter(F.col(etp) == etype), etype, str(exc)[:500], report
+                    )
 
             # per-table flushes run concurrently, like the reference's
             # independent bulkers (src/main.ts:463-514) — each submits
             # its own Spark jobs against the shared cached batch, and
             # distinct types write to distinct table directories
-            if len(types) <= 1:
-                for etype in sorted(types):
-                    _process_type(etype)
-            else:
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(types))
-                ) as pool:
-                    list(pool.map(_process_type, sorted(types)))
+            types = sorted(batch.frames)
+            try:
+                if len(types) <= 1:
+                    for etype in types:
+                        _process_type(etype)
+                else:
+                    with ThreadPoolExecutor(
+                        max_workers=min(8, len(types))
+                    ) as pool:
+                        list(pool.map(_process_type, types))
+            finally:
+                batch.release()
             return report
         finally:
             events.unpersist()

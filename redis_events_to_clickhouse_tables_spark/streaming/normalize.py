@@ -13,27 +13,41 @@ The reference rewrites every event row before INSERT
   P8 user transform hook                     (:290, src/transform.ts)
 
 Here the whole pipeline is one column-expression projection over a
-typed DataFrame — a single Spark job regardless of row count, all
-JVM-side. Driver-side work is schema introspection plus two
-O(columns) aggregates: max array lengths (P5) and the date-string /
-defined-value scans (D1/F3).
+typed DataFrame, all JVM-side. The ingest engine normalizes a whole
+micro-batch in one routed pass, whatever the number of event types:
+
+  1. one aggregate grouped by the routing key: the routing table, the
+     per-type and missing-key counts, and the max array lengths (P5);
+  2. one flattened projection of every routed row, persisted once;
+  3. one aggregate over that cache grouped by the routing key: each
+     type's column presence (F3/G2) and date-string refinement (D1).
+
+Each table's frame is then a filter of the cache plus its own
+refinements. The batch schema is already the union across types, so
+another type's keys and array positions past a type's own maximum are
+NULL for that type and drop under the presence rule. A single table's
+frame (DLQ retry, direct callers) is the one-group case of the same
+code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from dataclasses import dataclass
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import IngestConfig
 from ..functions.names import snake_case
-from ..plans.inference import (
-    _is_date_string,
-    apply_leaf_types,
-    sniff_timestamp,
-)
+from ..plans.inference import _is_date_string, sniff_timestamp
 
 SYSTEM_COLUMNS = ("received_at", "sent_at", "message_id")
+# carries the routing value through the flattened projection;
+# snake_case never yields a leading underscore, so no payload column
+# can take this name
+ROUTE_COLUMN = "__route"
 
 # Steady-state expression cache (VERDICT r9 item 5): in a long-running
 # ingest the SAME event shapes arrive micro-batch after micro-batch,
@@ -50,6 +64,12 @@ SYSTEM_COLUMNS = ("received_at", "sent_at", "message_id")
 # unboundedly.
 _EXPR_CACHE: dict[tuple, tuple] = {}
 _EXPR_CACHE_MAX = 256
+
+
+def _cache_put(key: tuple, value) -> None:
+    if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
+        _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
+    _EXPR_CACHE[key] = value
 
 
 def _cfg_expr_sig(cfg: IngestConfig) -> tuple:
@@ -82,7 +102,9 @@ def _received_at_expr(df: DataFrame, col_name: str | None) -> Column:
     elif isinstance(dt, T.TimestampType):
         parsed = src
     elif isinstance(dt, (T.LongType, T.DoubleType)):
-        parsed = F.timestamp_millis(src.cast("long"))
+        # try_ casts: an out-of-range value falls back to the stamp
+        # time like an unparseable string, never failing the batch
+        parsed = F.timestamp_micros(F.try_multiply(src.try_cast("long"), F.lit(1000)))
     else:
         parsed = F.lit(None).cast("timestamp")
     return F.coalesce(parsed, F.current_timestamp())
@@ -170,24 +192,39 @@ def _flatten_exprs(
     return list(dedup.items())
 
 
+@dataclass
+class RoutedBatch:
+    """One batch normalized per routing value (see :func:`normalize_events`).
+
+    ``frames`` maps each routing value to its table's normalized frame;
+    ``counts`` maps every routing value to its row count, with the
+    missing-key bucket under ``None``. ``release()`` unpersists the
+    shared flattened cache the frames read from.
+    """
+
+    frames: dict[Any, DataFrame]
+    counts: dict[Any, int]
+    cached: DataFrame | None = None
+
+    def release(self) -> None:
+        if self.cached is not None:
+            self.cached.unpersist()
+            self.cached = None
+
+
 def normalize_events(
     df: DataFrame,
     cfg: IngestConfig | None = None,
-    materialize: bool = False,
-) -> DataFrame | tuple[DataFrame, "DataFrame | None", "int | None"]:
-    """Full P1-P8 pipeline over a typed event DataFrame (one table's rows).
+    route_by: str | None = None,
+) -> DataFrame | RoutedBatch:
+    """Full P1-P8 pipeline over a typed event DataFrame.
 
-    ``materialize=True`` is the ingest hot path (VERDICT r8 item 6):
-    the flattened projection is persisted and filled by the SAME
-    aggregate job that decides the D1/F3 refinements, and the call
-    returns ``(normalized, cached, n_rows)`` where ``cached`` is the
-    persisted intermediate the caller must ``unpersist()`` after
-    writing and ``n_rows`` is the batch row count measured by that
-    same aggregate (``None`` when a custom P8 transform might change
-    it — re-count then). The returned frame is then a cheap
-    cast/drop/transform projection over that cache, so the whole
-    normalize+count+append sequence executes the flatten exactly once
-    and runs no separate count job.
+    Without ``route_by`` every row is one table's row and the
+    normalized frame is returned. With ``route_by`` (the routing-key
+    column, G1) the rows are normalized per routing value in one pass
+    and a :class:`RoutedBatch` is returned; its flattened cache is
+    persisted and the caller must ``release()`` it after writing.
+    Rows whose routing value is NULL are only counted (F1).
     """
     cfg = cfg or IngestConfig()
 
@@ -199,6 +236,8 @@ def normalize_events(
     tmp_names = [f"__p{i}" for i in range(len(orig_names))]
     tmp_of = dict(zip(orig_names, tmp_names))
     renamed = df.toDF(*tmp_names)
+    # the single-table case is the one-group case of the same pipeline
+    key = F.lit(0) if route_by is None else F.col(f"`{tmp_of[route_by]}`")
 
     # P1: drop routing + bookkeeping keys
     drop = {cfg.event_type_property, *cfg.reserved_keys}
@@ -208,14 +247,31 @@ def normalize_events(
         if f.name not in drop
     ]
 
-    # P5 needs batch max array lengths — one aggregate, O(array columns)
-    array_tmps = [tmp for _, tmp, dt in payload if isinstance(dt, T.ArrayType)]
-    max_lens: dict[str, int] = {}
-    if cfg.split_array_items_as_columns and array_tmps:
-        row = renamed.agg(
-            *[F.max(F.size(F.col(f"`{c}`"))).alias(c) for c in array_tmps]
-        ).collect()[0]
-        max_lens = {c: (row[c] or 0) for c in array_tmps}
+    # G1 routing table + F1 counts + P5 max array lengths per routing
+    # value: one grouped aggregate (cardinality bounded by the number
+    # of destination tables, like the reference's bulker map)
+    array_tmps = (
+        [tmp for _, tmp, dt in payload if isinstance(dt, T.ArrayType)]
+        if cfg.split_array_items_as_columns
+        else []
+    )
+    groups = (
+        renamed.groupBy(key.alias(ROUTE_COLUMN))
+        .agg(
+            F.count(F.lit(1)).alias("__n_rows"),
+            *[F.max(F.size(F.col(f"`{c}`"))).alias(c) for c in array_tmps],
+        )
+        .collect()
+    )
+    counts = {r[ROUTE_COLUMN]: int(r["__n_rows"]) for r in groups}
+    if route_by is None:
+        counts.setdefault(0, 0)  # an empty frame still yields its table
+    routed = [r for r in groups if r[ROUTE_COLUMN] is not None]
+    if not routed and route_by is not None:
+        return RoutedBatch({}, counts)
+    # batch-wide max: positions past one type's own max are NULL for
+    # that type and drop with its other never-defined columns below
+    max_lens = {c: max((r[c] or 0 for r in routed), default=0) for c in array_tmps}
 
     # key on the ORIGINAL schema (temp names are positional, so the
     # original names + types determine every expression built below)
@@ -225,7 +281,6 @@ def normalize_events(
         _cfg_expr_sig(cfg),
         tuple(sorted(max_lens.items())),
     )
-    df = renamed
     hit = _EXPR_CACHE.get(cache_key)
     if hit is not None:
         body, received_at = hit
@@ -236,93 +291,83 @@ def normalize_events(
         # reference assigns them after spreading the row,
         # clickhouse-batch-client.class.ts:280-288)
         body = [(n, c) for n, c in body if n not in SYSTEM_COLUMNS]
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-        _EXPR_CACHE[cache_key] = (body, received_at)
+        _cache_put(cache_key, (body, received_at))
 
-    # P2-P7 in one projection
-    flat = df.select(
+    # P2-P7 in one projection over every routed row; the routing value
+    # rides along under a name no snake_case payload column can take
+    source = renamed if route_by is None else renamed.filter(key.isNotNull())
+    flat = source.select(
+        key.alias(ROUTE_COLUMN),
         *[c for _, c in body],
         received_at.alias("received_at"),
         F.current_timestamp().alias("sent_at"),
         F.expr("uuid()").alias("message_id"),
     )
     cached: DataFrame | None = None
-    if materialize:
+    if route_by is not None:
         # persist BEFORE the refinement aggregate: that aggregate is
-        # the job that fills the cache, and everything downstream
-        # (count, evolve, append) reads the cache instead of re-running
-        # the flatten. Also pins current_timestamp()/uuid() so replayed
-        # reads of the frame can't re-stamp them.
-        cached = flat.persist()
-        flat = cached
+        # the job that fills the cache, and every table's count, evolve
+        # and append reads the cache instead of re-running the flatten.
+        # Also pins current_timestamp()/uuid() so replayed reads of the
+        # frame can't re-stamp them.
+        cached = flat = flat.persist()
 
-    # D1 refinement + F3/G2 presence in ONE aggregate job: string
-    # payload columns that are date-strings in every defined row
-    # become timestamps, and a column participates only if some row
-    # defines it (reference getColsMinimumList,
-    # clickhouse-batch-client.class.ts:383-395). The two decisions
-    # used to be separate full-scan jobs per table; merging them
-    # halves the per-table driver actions on the ingest hot path.
-    # (Counting pre-refinement is equivalent to the old post-
-    # refinement count: a column only refines when EVERY defined
-    # value parses, so the non-null count is unchanged by parsing.)
-    n_rows: int | None = None
-    payload_cols = [c for c in flat.columns if c not in SYSTEM_COLUMNS]
-    if payload_cols:
-        # the aggregate's expression list is the second per-batch py4j
-        # builder on the hot path (3 Column trees per column, and
-        # _is_date_string is a deep one) — memoized on the same
-        # signature: flat's schema is fully determined by cache_key
-        agg_key = (*cache_key, "refinement_aggs")
-        agg_hit = _EXPR_CACHE.get(agg_key)
-        if agg_hit is not None:
-            string_cols, aggs = agg_hit
-        else:
-            string_cols = [
-                c
-                for c in payload_cols
-                if isinstance(flat.schema[c].dataType, T.StringType)
-            ]
-            aggs = [
-                F.count(F.col(f"`{c}`")).alias(f"__n_{i}")
-                for i, c in enumerate(payload_cols)
-            ] + [
-                F.min(
-                    F.when(
-                        F.col(f"`{c}`").isNotNull(),
-                        _is_date_string(F.col(f"`{c}`")).cast("int"),
-                    )
-                ).alias(f"__d_{i}")
-                for i, c in enumerate(string_cols)
-            ] + [
-                # total row count rides the same job: callers on the
-                # hot path get it for free instead of a count job
-                F.count(F.lit(1)).alias("__n_rows")
-            ]
-            if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-                _EXPR_CACHE.pop(next(iter(_EXPR_CACHE)))
-            _EXPR_CACHE[agg_key] = (string_cols, aggs)
-        row = flat.agg(*aggs).collect()[0]
-        n_rows = int(row["__n_rows"])
-        refinements = {
-            c: T.TimestampType()
+    # D1 refinement + F3/G2 presence per routing value in ONE grouped
+    # aggregate: string payload columns that are date-strings in every
+    # defined row of a type become timestamps for that type, and a
+    # column participates in a type's table only if some row of that
+    # type defines it (reference getColsMinimumList,
+    # clickhouse-batch-client.class.ts:383-395). The aggregate and the
+    # per-table column expressions are the second per-batch py4j
+    # builder on the hot path (_is_date_string is a deep tree) —
+    # memoized on the same signature: flat's schema is fully
+    # determined by cache_key.
+    agg_key = (*cache_key, "refinement_aggs")
+    hit = _EXPR_CACHE.get(agg_key)
+    if hit is None:
+        schema = flat.schema
+        payload_cols = [
+            f.name for f in schema.fields if f.name not in (ROUTE_COLUMN, *SYSTEM_COLUMNS)
+        ]
+        string_cols = [
+            c for c in payload_cols if isinstance(schema[c].dataType, T.StringType)
+        ]
+        plain = {c: F.col(f"`{c}`") for c in (*payload_cols, *SYSTEM_COLUMNS)}
+        dated = {c: sniff_timestamp(plain[c]).alias(c) for c in string_cols}
+        aggs = [
+            F.count(plain[c]).alias(f"__n_{i}") for i, c in enumerate(payload_cols)
+        ] + [
+            F.min(
+                F.when(plain[c].isNotNull(), _is_date_string(plain[c]).cast("int"))
+            ).alias(f"__d_{i}")
             for i, c in enumerate(string_cols)
-            if row[f"__d_{i}"] == 1
+        ]
+        hit = (payload_cols, string_cols, aggs, plain, dated)
+        _cache_put(agg_key, hit)
+    payload_cols, string_cols, aggs, plain, dated = hit
+    decided: dict[Any, Row] = {}
+    if payload_cols:
+        decided = {
+            r[ROUTE_COLUMN]: r for r in flat.groupBy(ROUTE_COLUMN).agg(*aggs).collect()
         }
-        flat = apply_leaf_types(flat, refinements)
-        empty = [c for i, c in enumerate(payload_cols) if not row[f"__n_{i}"]]
-        if empty:
-            flat = flat.drop(*empty)
 
     # P8: transform hook (default adds timestamp = received_at)
     transform = cfg.transform or default_transform
-    out = transform(flat)
-    if materialize:
-        # n_rows is authoritative only for the default transform (it
-        # adds a column, never filters); a custom P8 hook may change
-        # the row count, so callers must re-count then
-        if cfg.transform is not None:
-            n_rows = None
-        return out, cached, n_rows
-    return out
+    frames: dict[Any, DataFrame] = {}
+    for value in counts:
+        if value is None:
+            continue
+        row = decided[value].asDict() if value in decided else {}
+        refined = {c for i, c in enumerate(string_cols) if row.get(f"__d_{i}") == 1}
+        cols = [
+            dated[c] if c in refined else plain[c]
+            for i, c in enumerate(payload_cols)
+            if row.get(f"__n_{i}")
+        ]
+        table = flat.filter(F.col(ROUTE_COLUMN) == F.lit(value)).select(
+            *cols, *[plain[c] for c in SYSTEM_COLUMNS]
+        )
+        frames[value] = transform(table)
+    if route_by is None:
+        return frames[0]
+    return RoutedBatch(frames, counts, cached)

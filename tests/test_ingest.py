@@ -18,6 +18,14 @@ def _engine(spark, tmp_path, **cfg):
     return IngestEngine(spark, store, IngestConfig(**cfg)), store
 
 
+def _schema(df):
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.length())]
+
+
 def test_routing_and_insert(spark, tmp_path):
     engine, store = _engine(spark, tmp_path)
     report = engine.process_raw_batch(
@@ -222,6 +230,22 @@ def test_data_errors_quoting_hostile_values_are_demoted():
     assert not _is_interruption(ValueError("process killed the budget"))
 
 
+def test_real_spark_data_error_is_not_an_interruption(spark):
+    """A captured PySpark error carries its throwable as ``_origin``:
+    a real data error (CAST_OVERFLOW) must classify as a bad batch
+    and be dead-lettered, not re-raised as an interruption."""
+    import pytest
+
+    from redis_events_to_clickhouse_tables_spark.streaming.ingest import (
+        _is_interruption,
+    )
+
+    with pytest.raises(Exception) as info:
+        spark.sql("SELECT CAST(1e300 AS BIGINT)").collect()
+    assert info.value.getCondition() == "CAST_OVERFLOW"
+    assert not _is_interruption(info.value)
+
+
 def test_interruption_replay_cap_demotes_disguised_poison(spark, tmp_path, monkeypatch):
     """Backstop for a poison batch whose failure is interruption-shaped
     every time: after _INTERRUPTION_REPLAY_CAP re-raises for the same
@@ -422,3 +446,150 @@ def test_k4_trace_env_surface(monkeypatch):
         == "/x/t.log"
     )
     assert IngestConfig.from_env({"DEBUG_STORE_LOG_PATH": "/x/t.log"}).trace_path is None
+
+
+def test_overflowing_received_at_falls_back_to_stamp(spark, tmp_path):
+    """A numeric __received_at out of the timestamp range falls back to
+    the stamp time, like an unparseable string: no row value can fail
+    the shared normalize stage, so the other type commits too."""
+    import datetime
+
+    engine, store = _engine(spark, tmp_path)
+    before = datetime.datetime.now() - datetime.timedelta(minutes=5)
+    report = engine.process_raw_batch(
+        _raw(
+            spark,
+            [
+                {"event_type": "a", "x": 1, "__received_at": 1e300},
+                {"event_type": "a", "x": 2, "__received_at": 1_700_000_000_000},
+                {"event_type": "b", "y": "z"},
+            ],
+        ),
+        batch_id=0,
+    )
+    assert report.tables == {"a": 2, "b": 1}
+    assert report.n_dead_lettered == 0 and report.errors == {}
+    assert not (store.root / "_dlq").exists()
+    stamped = {r["x"]: r["received_at"] for r in store.read("a").collect()}
+    assert stamped[1] > before
+    assert stamped[2] == datetime.datetime(2023, 11, 14, 22, 13, 20)
+
+
+def test_per_type_decisions_under_shared_aggregate(spark, tmp_path):
+    """Column presence, date refinement and array positions are decided
+    per event type even though one batch schema spans every type: a
+    string column holding dates in one type and free text in another,
+    array maxima that differ by type, and keys specific to each type."""
+    engine, store = _engine(
+        spark, tmp_path, split_array_items_as_columns=True, split_records_as_columns=True
+    )
+    report = engine.process_raw_batch(
+        _raw(
+            spark,
+            [
+                {"event_type": "a", "s": "2024-12-01", "arr": [1, 2, 3], "a_only": 1},
+                {"event_type": "a", "s": "02/02/2045", "arr": [4], "rec": {"inA": 1.5}},
+                {"event_type": "b", "s": "free text", "arr": [5], "b_only": True},
+                {"event_type": "b", "s": None, "arr": [], "rec": {"inB": "x"}},
+                {"event_type": "b", "arr": [6]},
+            ],
+        ),
+        batch_id=0,
+    )
+    assert report.tables == {"a": 2, "b": 3}
+    system = {
+        "received_at": "timestamp",
+        "sent_at": "timestamp",
+        "message_id": "string",
+        "timestamp": "timestamp",
+    }
+    assert _schema(store.read("a")) == {
+        "a_only": "bigint",
+        "arr_0": "bigint",
+        "arr_1": "bigint",
+        "arr_2": "bigint",
+        "rec_in_a": "double",
+        "s": "timestamp",
+        **system,
+    }
+    assert _schema(store.read("b")) == {
+        "arr_0": "bigint",
+        "b_only": "boolean",
+        "rec_in_b": "string",
+        "s": "string",
+        **system,
+    }
+    assert store.read("a").count() == 2
+    assert store.read("b").count() == 3
+
+
+def test_normalize_jobs_do_not_grow_with_event_types(spark, tmp_path):
+    """Routing and normalize cost a fixed number of Spark jobs per
+    batch: apart from the per-table parquet writes, an 8-type batch
+    runs exactly as many jobs as a 1-type batch (read from the status
+    store, which is kept with the UI disabled)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs_of(n_types: int) -> list[str]:
+        engine, _ = _engine(
+            spark,
+            tmp_path / f"t{n_types}",
+            split_array_items_as_columns=True,
+            split_records_as_columns=True,
+        )
+        raw = _raw(
+            spark,
+            [
+                {"event_type": f"t{i}", "x": j, "arr": list(range(i + 1)),
+                 f"k{i}": "2024-01-01", "rec": {"aB": j}}
+                for i in range(n_types)
+                for j in range(5)
+            ]
+            + [{"x": -1}],
+        )
+        store = sc.statusStore()
+        seen = {j.jobId() for j in _seq(store.jobsList(None))}
+        report = engine.process_raw_batch(raw, batch_id=0)
+        assert len(report.tables) == n_types and report.n_missing_routing_key == 1
+        sc.listenerBus().waitUntilEmpty()
+        return [j.name() for j in _seq(store.jobsList(None)) if j.jobId() not in seen]
+
+    one, eight = jobs_of(1), jobs_of(8)
+    writes = [sum(n.startswith("parquet at ") for n in jobs) for jobs in (one, eight)]
+    assert writes == [1, 8]
+    assert len(eight) - writes[1] == len(one) - writes[0], (one, eight)
+
+
+def test_shared_normalize_failure_dead_letters_every_type(spark, tmp_path, monkeypatch):
+    """A failure of the batch-wide normalize stage dead-letters every
+    routed type with its error (the batch completes instead of
+    stalling); DLQ retry then re-normalizes each table on its own."""
+    from redis_events_to_clickhouse_tables_spark.streaming import ingest
+
+    engine, store = _engine(spark, tmp_path)
+    original = ingest.normalize_events
+
+    def failing(df, cfg=None, route_by=None):
+        if route_by is not None:
+            raise RuntimeError("normalize exploded")
+        return original(df, cfg)
+
+    monkeypatch.setattr(ingest, "normalize_events", failing)
+    report = engine.process_raw_batch(
+        _raw(
+            spark,
+            [{"event_type": "a", "x": 1}, {"event_type": "b", "y": 2},
+             {"event_type": "b", "y": 3}, {"x": 4}],
+        ),
+        batch_id=0,
+    )
+    assert report.tables == {}
+    assert set(report.errors) == {"a", "b"}
+    assert report.n_dead_lettered == 3
+    dlq = engine.read_dlq().collect()
+    assert sorted(r["target_table"] for r in dlq) == ["a", "b", "b"]
+    assert all("normalize exploded" in r["error"] for r in dlq)
+
+    retry = engine.retry_dead_letters()
+    assert retry.tables == {"a": 1, "b": 2} and retry.errors == {}
+    assert store.read("b").count() == 2
